@@ -13,15 +13,38 @@ al., "Connected Components in MapReduce and Beyond", SoCC'14) gets
 O(log n) rounds; deliberately not implemented until a workload needs
 it.
 
-Spark-iterative hygiene: each round ends in localCheckpoint(eager) —
-without it the lineage doubles per round and the driver re-plans an
-exponentially growing DAG; with it each round is one shuffle of the
-(node, label) table joined against the (static, re-used) edge list.
+Round structure (every checkpoint is an eager action at call time):
+
+- **Edges.** The symmetric edge list (each pair in both directions) is
+  localCheckpoint-ed once as the static per-round probe side. No
+  ``distinct``: a repeated edge offers the same neighbor label twice,
+  and the min does not change.
+- **Seed.** The first labels are one aggregation over those edges,
+  ``least(a, min(b))`` grouped by ``a`` — every node's smallest
+  neighbor-or-self id. That is what the first join round from identity
+  labels would compute, without the identity ``distinct`` or the join.
+  It is not materialized on its own: the first round reads it inside
+  its own job.
+- **Rounds.** Each round joins the labels to the edges, takes the min
+  label per node and ends in ``localCheckpoint(eager)`` — without it
+  the lineage doubles per round and the driver re-plans an
+  exponentially growing DAG. The node's previous label rides the same
+  aggregation (one self row per node), and an ``Observation`` on the
+  checkpoint job counts the labels that changed: convergence is read
+  off the job the round runs anyway, not a separate count job.
+  ``max_iter`` counts these rounds, after the seed.
+- **Releases.** Under the context's batch lock (blocks.py), round i's
+  checkpoint is released once round i+1's exists, and the edge
+  checkpoint once the last round's exists. The call returns with
+  exactly one persisted RDD of its own, the returned label checkpoint;
+  the CALLER releases it once the output is consumed (e.g. through
+  ``blocks.batch_scope`` or a ``persisted_ids``/``release_blocks``
+  pair). On failure, everything the call persisted is released.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -34,51 +57,73 @@ def connected_components(
     """Label every node reachable through ``edges`` with the smallest
     node id in its component. Output: (node, component).
 
-    Raises RuntimeError if ``max_iter`` rounds don't converge — a
-    signal the graph needs the log-round variant, never silently wrong
-    labels.
+    Eager: the seed and every round run at call time, and the result
+    is a checkpoint the caller releases (see the module docstring).
+
+    Raises RuntimeError if ``max_iter`` join rounds after the seed
+    don't converge — a signal the graph needs the log-round variant,
+    never silently wrong labels.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)  # static per-round probe side
+    from myasynstreamjoin_spark.blocks import (
+        batch_lock,
+        persisted_ids,
+        release_ids,
     )
-    labels = sym.select("a").distinct().withColumn("label", F.col("a"))
-    label_t = labels.schema["label"].dataType
-    for _ in range(max_iter):
-        # The node's PREVIOUS label rides the union as a tagged column
-        # (round 12): each node has exactly one self row, so
-        # min("__self") recovers it inside the SAME min-label
-        # aggregation — and the convergence check becomes a map-only
-        # scan of the round's checkpoint instead of a second join of
-        # the new labels against the old (one join + shuffle per round
-        # removed, guide §2.4; label propagation itself is unchanged).
-        self_rows = labels.select(
-            "a", "label", F.col("label").alias("__self")
-        )
-        nbr = sym.join(labels, on="a").select(
-            F.col("b").alias("a"),
-            "label",
-            F.lit(None).cast(label_t).alias("__self"),
-        )
-        new = (
-            self_rows.unionByName(nbr)
-            .groupBy("a")
-            .agg(
-                F.min("label").alias("label"),
-                F.min("__self").alias("__old"),
+
+    spark = edges.sparkSession
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    with batch_lock(spark):
+        base = persisted_ids(spark)
+        try:
+            sym = e.union(
+                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            ).localCheckpoint(eager=True)  # static per-round probe side
+            edge_ids = persisted_ids(spark) - base
+            labels = sym.groupBy("a").agg(
+                F.least(F.col("a"), F.min("b")).alias("label")
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.where(F.col("label") != F.col("__old")).limit(1).count()
-        )
-        labels = new.select("a", "label")
-        if changed == 0:
-            return labels.select(F.col("a").alias("node"),
-                                 F.col("label").alias("component"))
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+            label_t = labels.schema["label"].dataType
+            prev: set[int] = set()
+            for _ in range(max_iter):
+                self_rows = labels.select(
+                    "a", "label", F.col("label").alias("__self")
+                )
+                nbr = sym.join(labels, on="a").select(
+                    F.col("b").alias("a"),
+                    "label",
+                    F.lit(None).cast(label_t).alias("__self"),
+                )
+                obs = Observation()
+                pre = persisted_ids(spark)
+                new = (
+                    self_rows.unionByName(nbr)
+                    .groupBy("a")
+                    .agg(
+                        F.min("label").alias("label"),
+                        F.min("__self").alias("__old"),
+                    )
+                    .observe(
+                        obs,
+                        F.count_if(F.col("label") != F.col("__old"))
+                        .alias("changed"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                # the new round materialized — the previous round's
+                # blocks are unreferenced now
+                release_ids(spark, prev)
+                prev = persisted_ids(spark) - pre
+                labels = new.select("a", "label")
+                if obs.get["changed"] == 0:
+                    release_ids(spark, edge_ids)
+                    return labels.select(F.col("a").alias("node"),
+                                         F.col("label").alias("component"))
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {max_iter} rounds"
+            )
+        except BaseException:
+            release_ids(spark, persisted_ids(spark) - base)
+            raise
 
 
 def dedup_survivors(

@@ -492,6 +492,17 @@ def ngram_jaccard_pairs(
     (mirrored in the oracle SQL).
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
+
+    Blocks: the call persists the per-document shingle arrays
+    (``shd``, MEMORY_AND_DISK) and checkpoints the df-capped shingle
+    set (``rare_set``, DISK_ONLY), and the returned frame reads both.
+    The CALLER releases them once the output is materialized: snapshot
+    ``blocks.persisted_ids`` before the call and ``release_blocks``
+    after the sink (or run both inside ``blocks.batch_scope``).
+    Releasing before the output is materialized breaks it — the
+    checkpoint has no lineage to recompute from. The release does not
+    clear ``shd``'s entry in the session's CacheManager;
+    ``spark.catalog.clearCache()`` does.
     """
     # Rebalance first: the shingle explode amplifies each row ~n_tokens×,
     # so byte-based scan partitioning under-parallelizes it badly.

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -56,3 +56,12 @@ def n_nodes(df: DataFrame, operator: str) -> int:
 def n_shuffles(df: DataFrame) -> int:
     """Count Exchange operators in the physical plan (pre-AQE estimate)."""
     return n_nodes(df, "Exchange")
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count). The difference
+    across a call is the call's compile count: zero on a warm call means
+    every stage came out of the codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # type: ignore[attr-defined]
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -55,6 +55,21 @@ SESSION_CONFS: dict[str, str] = {
 }
 
 
+# Capacity of Spark's generated-class cache
+# (``spark.sql.codegen.cache.maxEntries``, default 100). The cache is
+# an LRU, and a pipeline that cycles through more distinct whole-stage
+# classes than it holds never hits: measured on the dedup family
+# (minhash_lsh_pairs, ngram_jaccard_pairs → connected_components,
+# remove_duplicate_spans over a 600-document corpus, local[4]), every
+# warm pass recompiled its whole 148-class working set, and the JIT
+# threads then spent more CPU on the fresh classes than the executor
+# tasks spent on data. At 1000 the same pass compiles each class once
+# per session. A STATIC conf: it is set in ``get_spark``'s builder, not
+# in SESSION_CONFS (a runtime ``conf.set`` on it fails), so a session
+# an outside harness built keeps that harness's setting.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 # Executor-memory sizing for the GRAPH family (operator documentation
 # distilled from the sf3/sf10ish probe campaigns, SCALEPROBE_r05/r06 +
 # round 7):
@@ -203,6 +218,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in SESSION_CONFS.items():
         builder = builder.config(k, v)

@@ -4,7 +4,10 @@ call — Python plan building plus any control reads / eager
 checkpoints baked into the operator) and EXECUTION (the noop-sink
 materialization), and counts plan features (Exchange nodes, join
 strategies, Python-eval nodes) so a fixed-cost-dominated query is
-distinguishable from a data-bound one at sf0.1.
+distinguishable from a data-bound one at sf0.1. It also counts the
+classes Janino compiled per pass (construction plus execution): a warm
+pass that still compiles means the working set outgrew the codegen
+cache, or a plan changed between passes.
 
 Usage:
     python tools/profile_queries.py [q_name ...] > PROFILE.json
@@ -29,7 +32,10 @@ from myasynstreamjoin_spark.blocks import (  # noqa: E402
     persisted_ids,
     release_blocks,
 )
-from myasynstreamjoin_spark.plans.explain import formatted_plan  # noqa: E402
+from myasynstreamjoin_spark.plans.explain import (  # noqa: E402
+    codegen_compiles,
+    formatted_plan,
+)
 from myasynstreamjoin_spark.session import get_spark  # noqa: E402
 
 
@@ -70,11 +76,13 @@ def main() -> int:
             fn = queries[name]
             pre = persisted_ids(spark)
             spark.sparkContext.setJobDescription(f"profile:{name}")
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
+            compiles = codegen_compiles(spark) - c0
             feats = None
             if _pass == 0:
                 try:
@@ -85,10 +93,12 @@ def main() -> int:
                 release_blocks(spark, pre)
             spark.sparkContext.setJobDescription(None)
             cur = report.setdefault(
-                name, {"construct": [], "execute": [], "plan": feats}
+                name,
+                {"construct": [], "execute": [], "compiles": [], "plan": feats},
             )
             cur["construct"].append(round(t1 - t0, 3))
             cur["execute"].append(round(t2 - t1, 3))
+            cur["compiles"].append(compiles)
             if feats is not None:
                 cur["plan"] = feats
         spark.catalog.clearCache()
@@ -101,6 +111,7 @@ def main() -> int:
             "execute_min": min(r["execute"][1:] or r["execute"]),
             "construct_all": r["construct"],
             "execute_all": r["execute"],
+            "compiles_all": r["compiles"],
             "plan": r["plan"],
         }
     json.dump(out, sys.stdout, indent=1)
